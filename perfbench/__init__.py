@@ -1,0 +1,1 @@
+"""Replay + analytics benchmark; entry point: ``python3 perfbench/run.py``."""
